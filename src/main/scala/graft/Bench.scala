@@ -11,6 +11,23 @@ import org.apache.spark.sql.functions._
   * way sum(xxhash64) does on full-range 64-bit hashes. */
 object Bench {
 
+  /** Force full execution of df: hash every output column per row, then
+    * bit_xor all row hashes into one Long (overflow-free by construction).
+    * The same aggregate counts the rows, which is what it returns. */
+  def force(df: org.apache.spark.sql.DataFrame): Long =
+    df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
+      .agg(expr("bit_xor(h)"), count(lit(1))).collect()(0).getLong(1)
+
+  /** QuietProbe's adaptive stop rule (the r14 lesson — a fixed min-of-3 in
+    * a fresh JVM minted q198 at 7.6 s when warmup-aware runs reach 2.4 s):
+    * run at least `minRuns`, then keep running while the LAST run sits more
+    * than 10% above the running min (a still-improving number is
+    * JIT-dominated, not the number), hard-capped at `maxRuns`. */
+  private[graft] def needsAnotherRun(times: Seq[Double], minRuns: Int,
+      maxRuns: Int): Boolean =
+    times.size < minRuns ||
+      (times.size < maxRuns && times.last > times.min * 1.1)
+
   /** Parse the flat numeric `"queries":{...}` map out of a history line,
     * bounded at the map's closing brace so the `bench_only` twin map that
     * follows can never overwrite a board query's baseline (the values are
@@ -393,31 +410,8 @@ object Bench {
     val budgetFrac =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_FRAC", "0.7").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // production posture: native functions + optimizer rules + the TopK
-      // planner strategy ride the session from birth (rules stay inert
-      // without their opt-in confs / custom nodes)
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Pin ANSI explicitly (Spark 4 default = true) so bench behavior never
-      // shifts with a deployment-level default.
-      .config("spark.sql.ansi.enabled", "true")
-      // files-based checkpoints (connected components) are reclaimed when
-      // their RDD is GC'd, instead of accumulating for the session lifetime
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
-    /** Force full execution of df: hash every output column per row, then
-      * bit_xor all row hashes into one Long. Overflow-free by construction. */
-    def force(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-    }
     // Optional comma-separated allowlist for local iteration on a hot query.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     // Timed-board exclusions (plan-shape twins) — see defaultTimedExclusions.

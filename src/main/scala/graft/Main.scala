@@ -4,7 +4,6 @@ import graft.operators.{Audit, Enrich}
 import graft.sinks.{Sinks, SpoolDrain}
 import graft.sources.{SpotSource, WsprNetClient}
 import graft.streaming.{DaemonControl, Ingest}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI driver (reference: T2 scrape-once, T3 daemon loop, T4 pidfile,
@@ -24,25 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Main {
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true") // pin, don't inherit
-      // files-based checkpoints (connected components) are reclaimed when
-      // their RDD is GC'd, instead of accumulating for the session lifetime
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = args.toList match {
     case "enrich" :: in :: out :: Nil =>
-      val spark = session()
+      val spark = Session()
       val batch = SpotSource.sorted(SpotSource.load(spark, in))
       val enriched = Enrich.formatted(batch)
       Sinks.writeCsv27(enriched, out)
@@ -51,7 +34,7 @@ object Main {
       spark.stop()
 
     case "audit" :: in :: Nil =>
-      val spark = session()
+      val spark = Session()
       val batch =
         (if (in.endsWith(".json") || in.endsWith(".csv")) SpotSource.load(spark, in)
          else spark.read.parquet(in)).cache() // two actions below, one read
@@ -66,7 +49,7 @@ object Main {
         System.err.println(s"stream daemon already running (see $ckpt/graft.pid)")
         sys.exit(1)
       }
-      val spark = session()
+      val spark = Session()
       val q = Ingest.start(spark, in, ckpt, out)
       q.awaitTermination()
 
@@ -78,7 +61,7 @@ object Main {
         System.err.println(s"docs daemon already running (see $ckpt/graft.pid)")
         sys.exit(1)
       }
-      val spark = session()
+      val spark = Session()
       val q = streaming.DocIngest.start(spark, in, ckpt, corpus, index)
       q.awaitTermination()
 
@@ -122,7 +105,7 @@ object Main {
       } else SpoolDrain.run(spool, transport, () => true)
 
     case "scrape" :: out :: flags =>
-      val spark = session()
+      val spark = Session()
       val cfg = WsprNetClient.Config(
         user = sys.env.getOrElse("WSPRNET_USER", ""),
         password = sys.env.getOrElse("WSPRNET_PASSWORD", ""))

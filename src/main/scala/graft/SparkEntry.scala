@@ -7,6 +7,7 @@ import graft.sources.SpotSynth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Driver contract — see SURVEY.md §7 + OracleSql for the DuckDB mirrors.
   *
@@ -769,7 +770,7 @@ object SparkEntry {
       // re-runs per reference.
       graft.util.Checkpoints.ensureDir(s)
       val pairs = Dedup.ngramJaccardPairs(tp(s, dir, "documents"), 3, 0.5)
-        .select("a_id", "b_id").barrierDisk()
+        .select("a_id", "b_id").barrier(StorageLevel.DISK_ONLY)
       val touched = col("a_id") % 10 === 7 || col("b_id") % 10 === 7
       Dedup.ccInsert(Dedup.connectedComponents(pairs.filter(!touched)),
         pairs.filter(touched)).orderBy("doc_id")
@@ -1098,7 +1099,7 @@ object SparkEntry {
         .select((col("o_custkey") * 2).cast("long").as("src"),
           (col("l_suppkey") * 2 + 1).cast("long").as("dst"),
           (col("o_orderkey") % 10 === 0).as("late"))
-        .barrierDisk()
+        .barrier(StorageLevel.DISK_ONLY)
       val base = Graph.symmetrize(directed.filter(!col("late")).drop("late"))
       val batch = Graph.symmetrize(directed.filter(col("late")).drop("late"))
       val warm = Graph.lpRounds(Graph.lpInit(base), 5)
@@ -1119,7 +1120,7 @@ object SparkEntry {
         .select((col("o_custkey") * 2).cast("long").as("src"),
           (col("l_suppkey") * 2 + 1).cast("long").as("dst"),
           (col("o_orderkey") % 10 === 0).as("late"))
-        .barrierDisk()
+        .barrier(StorageLevel.DISK_ONLY)
       val base = Graph.symmetrize(directed.filter(!col("late")).drop("late"))
       val batch = Graph.symmetrize(directed.filter(col("late")).drop("late"))
       val warm = Graph.rankRounds(Graph.rankInit(base), 5)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.util.Checkpoints.BarrierOps
+import org.apache.spark.storage.StorageLevel
 
 /** Graph centrality over an edge list — the quality-propagation primitive a
   * training-data pipeline uses to rank entities (hosts by link graph,
@@ -651,7 +652,6 @@ object Graph {
     * Self-loops are legal (dropped from propagation, node kept). */
   def stronglyConnectedComponents(edges: DataFrame, maxPeels: Int = 30,
       maxLabelRounds: Int = 80): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val spark = edges.sparkSession
     graft.util.Checkpoints.ensureDir(spark)
     val e0 = edges.select(col("src").cast("long").as("src"),
@@ -830,7 +830,7 @@ object Graph {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .barrierDisk()
+      .barrier(StorageLevel.DISK_ONLY)
     val deg = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

@@ -4,6 +4,7 @@ import graft.functions.PortableHashes
 import graft.util.Checkpoints.BarrierOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The composed training-data pipeline — the flow a pretraining data team
   * actually ships, chained from the individually-oracled stage operators:
@@ -59,7 +60,7 @@ object Pipeline {
       .filter(col("quality") >= minQuality && col("ngram_repetition") < maxRepetition)
       .select(col("doc_id"), col("source"), col("text"))
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val gated = gatedPlan.barrierDisk()
+    val gated = gatedPlan.barrier(StorageLevel.DISK_ONLY)
     // 2. exact keep-rule
     val key = concat_ws(" ", slice(split(col("text"), " "), 1, 5))
     val exKeep = Dedup.exactGroups(gated, key)
@@ -77,7 +78,7 @@ object Pipeline {
     val contaminated = Dedup.contaminatedBy(
       train, docs.filter(col("doc_id") % 10 === 0), 5).select("doc_id")
     val surv3 = train.join(contaminated, Seq("doc_id"), "left_anti")
-      .barrierDisk()
+      .barrier(StorageLevel.DISK_ONLY)
     // 5. mixture sample
     val sampled = Sampling.mixtureSample(surv3, "source", "doc_id", weights, total)
     val sampDocs = surv3.join(sampled.select("doc_id"), Seq("doc_id"), "left_semi")

@@ -5,6 +5,7 @@ import graft.util.Checkpoints.BarrierOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -753,7 +754,7 @@ object Similarity {
     val uu = wts.join(nrm, "doc_id")
       .select(col("doc_id"), col("token"), col("df"),
         round(col("w") / col("nm"), 9).as("u"))
-      .barrierDisk()
+      .barrier(StorageLevel.DISK_ONLY)
     val mu = uu.groupBy("token").agg(max(col("u")).as("mu"))
     val ord = Window.partitionBy("doc_id").orderBy(col("df"), col("token"))
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)

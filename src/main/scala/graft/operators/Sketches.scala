@@ -4,6 +4,7 @@ import graft.functions.PortableHashes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Sketch-based frequency estimation: a count-min sketch over the corpus
   * token stream, with heavy-hitter extraction. The streaming-friendly
@@ -345,12 +346,13 @@ object Sketches {
     // hashed gram universe once instead of re-running the explode+distinct
     // per consumer (the q101 fan-out lesson)
     graft.util.Checkpoints.ensureDir(docs.sparkSession)
-    val hv = graft.util.Checkpoints.barrierDisk(
+    val hv = graft.util.Checkpoints.barrier(
       docs.select(col(groupCol).cast("string").as("grp"),
           explode(graft.operators.Dedup.wordNGrams(col(textCol), n)).as("gram"))
         .select(col("grp"),
           PortableHashes.minhashGramHashes(col("gram"), 1).head.as("h"))
-        .distinct())
+        .distinct(),
+      StorageLevel.DISK_ONLY)
     val sk = hv.as[(String, Long)].groupByKey(_._1).mapValues(_._2)
       .agg(new graft.functions.RowTopKAggregator[Long](k, Ordering.Long).toColumn)
       .toDF("grp", "sk")

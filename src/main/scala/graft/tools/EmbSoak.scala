@@ -3,7 +3,7 @@ package graft.tools
 import graft.operators.{Pq, Similarity}
 import graft.streaming.EmbIngest
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Realistic-shape vector-daemon soak (r12 verdict ask #3): the 200-batch
@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   * same vec_id set, and the ADC probe serves top-k off the twin.
   *
   * Run: `tools/run_probe.sh graft.tools.EmbSoak [nBatches] [perBatch]`
-  * (defaults 60 x 1000); EMBSOAK JSON lines for SCALING.md. */
+  * (defaults 60 x 1000); EMBSOAK JSON lines for SCALING.md.
+  * `SPARK_GRAFT_CPUS` sets the core count (default: `nproc`). */
 object EmbSoak {
 
   private val dim = 384
@@ -60,13 +61,7 @@ object EmbSoak {
     val nlist = args.lift(2).map(_.toInt).getOrElse(256)
     val maxNlist = args.lift(3).map(_.toInt).getOrElse(4096)
     val (compactEvery, retrainEvery, checkpointEvery) = (10, 30, 20)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

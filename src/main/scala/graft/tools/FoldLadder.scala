@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.{Pq, Retrieval, Similarity}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measure the daemon FOLD cost at two scales — the proof that every
@@ -17,14 +16,7 @@ import org.apache.spark.sql.functions._
   * `FOLD` line per (tree, scale) with wall + shuffle totals. */
 object FoldLadder {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     val sf1 = Sf1Ladder.ensureFixture(spark)
 

@@ -33,6 +33,7 @@ import org.apache.spark.sql.functions._
   * Run: `sbt "runMain graft.tools.GateLadder [baseDocs] [perBatch]"`;
   * prints one `GATE_LADDER` JSON line per rung plus a `GATE_EXPONENTS`
   * summary (log10 of the ×10 wall ratio — 0 flat, 1 linear).
+  * `SPARK_GRAFT_CPUS` sets the core count (default: `nproc`).
   */
 object GateLadder {
 
@@ -96,13 +97,7 @@ object GateLadder {
     // gate_vector's ~0.5 exponent at a rung where the √n quantizer
     // actually resizes — 5k→50k→500k spans nlist 70→223→707)
     val nRungs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,8 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Per-job wall-time profile of one or more declared queries — the
   * guide-§1 "measure first" instrument. Runs each named query exactly the
@@ -15,22 +13,13 @@ import org.apache.spark.sql.functions._
   * timed collect?".
   *
   * Usage: runMain graft.tools.JobProfile q121_scc [q96_pagerank_incremental ...]
-  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS. */
+  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+  * (default: every core). */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProfile <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long)]()
@@ -58,19 +47,15 @@ object JobProfile {
       }
     })
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-
     args.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      try force(fn(spark, "/root/testdata/sf0.001")) // warm JIT + codegen
+      try graft.Bench.force(fn(spark, "/root/testdata/sf0.001")) // warm JIT + codegen
       catch { case e: Throwable =>
         System.err.println(s"[profile] warmup failed for $name: ${e.getMessage}")
       }
       jobs.clear(); stages.clear()
       val t0 = System.nanoTime()
-      force(fn(spark, sfDir))
+      graft.Bench.force(fn(spark, sfDir))
       val totalS = (System.nanoTime() - t0) / 1e9
       import scala.jdk.CollectionConverters._
       val bySite = jobs.asScala.toSeq.groupBy(_._1)

@@ -3,7 +3,7 @@ package graft.tools
 import graft.operators.Multimodal
 import graft.streaming.MediaIngest
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Media-daemon soak (r12 verdict ask #8): the last daemon without
@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * novel.
   *
   * Run: `tools/run_probe.sh graft.tools.MediaSoak [nBatches] [perBatch]`
-  * (defaults 100 x 40); MEDIASOAK JSON lines for SCALING.md. */
+  * (defaults 100 x 40); MEDIASOAK JSON lines for SCALING.md.
+  * `SPARK_GRAFT_CPUS` sets the core count (default: `nproc`). */
 object MediaSoak {
 
   /** A near-dup payload: re-encode the same seed at the same size, then
@@ -52,14 +53,12 @@ object MediaSoak {
     // MediaIngest.readCorpus scaladoc): target ~64 MB column batches
     val payloadB = imgW * imgH * 3 + 54
     val readerBatch = math.max(16, (64 << 20) / payloadB)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.parquet.columnarReaderBatchSize", readerBatch.toString)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
+    // micro-batches are small (tens to hundreds of docs): 8 shuffle
+    // partitions keeps per-stage task overhead from dominating the
+    // per-batch wall it measures
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", readerBatch.toString)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

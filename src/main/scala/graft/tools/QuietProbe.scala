@@ -1,50 +1,32 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import graft.Bench
 
-/** Probe: pin a query's HONEST cost on a quiet host — the PqResidualProbe
-  * protocol generalized (warm JVM, min of N back-to-back runs, GC time
-  * alongside each wall number so a GC-dominated run is visible instead of
-  * argued about). Mirrors Bench's session config exactly (local[32],
-  * shuffle=32, AQE, ANSI) so the number answers "what should the bench
-  * read on an idle machine", not a differently-tuned question.
+/** Probe: pin a query's HONEST cost on a quiet host (warm JVM, min of N
+  * back-to-back runs, GC time alongside each wall number so a GC-dominated
+  * run is visible instead of argued about). Runs on [[graft.Session]] and
+  * forces with [[graft.Bench.force]], the posture and forcing Bench itself
+  * times with (same core count, shuffle partitions, extensions, AQE, ANSI),
+  * so the number answers "what should the bench read on an idle machine",
+  * not a differently-tuned question — its quiet rows overlay Bench's
+  * regression baseline as trustworthy minimums.
   *
   * SPARK_GRAFT_PROBE_QUERIES: comma-separated SparkEntry query names
   * (default q68_dup_windows,q69_pagerank — the r8→r9 disputed pair).
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_PROBE_RUNS as usual. */
+  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_PROBE_RUNS as usual; SPARK_GRAFT_CPUS
+  * as for Bench (every core when unset). */
 object QuietProbe {
-
-  /** Adaptive stop rule (the r14 lesson — a fixed min-of-3 in a fresh
-    * JVM minted q198 at 7.6 s when warmup-aware runs reach 2.4 s): run
-    * at least `minRuns`, then keep running while the LAST run sits more
-    * than 10% above the running min (a still-improving number is
-    * JIT-dominated, not the number), hard-capped at `maxRuns`. */
-  private[graft] def needsAnotherRun(times: Seq[Double], minRuns: Int,
-      maxRuns: Int): Boolean =
-    times.size < minRuns ||
-      (times.size < maxRuns && times.last > times.min * 1.1)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE_QUERIES",
       "q68_dup_windows,q69_pagerank").split(",").map(_.trim).toSeq
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     import scala.jdk.CollectionConverters._
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
     // Per-run steal telemetry (r16 ask #2): a "quiet" claim must be
     // MEASURED, not asserted — the two r15q rows disagreed on q198 by
     // 1.7x with nothing in the artifact to adjudicate which slot was
@@ -54,8 +36,8 @@ object QuietProbe {
     val probed = names.flatMap { name =>
       val fn = graft.SparkEntry.queries(name)
       try {
-        force(fn(spark, "/root/testdata/sf0.001")) // warm JIT + plan cache
-        // adaptive rerun count — see [[needsAnotherRun]]
+        Bench.force(fn(spark, "/root/testdata/sf0.001")) // warm JIT + plan cache
+        // adaptive rerun count — see [[graft.Bench.needsAnotherRun]]
         val maxRuns = math.max(runs,
           sys.env.getOrElse("SPARK_GRAFT_PROBE_MAX_RUNS", "10").toInt)
         val times = scala.collection.mutable.ArrayBuffer[Double]()
@@ -63,16 +45,16 @@ object QuietProbe {
         var r = 0
         do {
           r += 1
-          val j0 = graft.Bench.cpuJiffies()
+          val j0 = Bench.cpuJiffies()
           val g0 = gcMs; val t0 = System.nanoTime()
-          force(fn(spark, sfDir))
+          Bench.force(fn(spark, sfDir))
           val wall = (System.nanoTime() - t0) / 1e9
-          val steal = graft.Bench.stealPct(j0, graft.Bench.cpuJiffies())
+          val steal = Bench.stealPct(j0, Bench.cpuJiffies())
           println(f"PROBE $name r$r: $wall%.2f s wall, ${gcMs - g0} ms gc, " +
             f"$steal%.2f%% steal")
           times += wall
           steals += steal
-        } while (needsAnotherRun(times.toSeq, runs, maxRuns))
+        } while (Bench.needsAnotherRun(times.toSeq, runs, maxRuns))
         val maxSteal = if (steals.forall(_ < 0)) -1.0 else steals.filter(_ >= 0).max
         println(f"PROBE $name MIN: ${times.min}%.2f s of $r runs " +
           f"(spread ${times.max / times.min}%.2fx, max steal $maxSteal%.2f%%${
@@ -110,7 +92,7 @@ object QuietProbe {
         "\"" + k + "\":" + f3(s)
       }.mkString("{", ",", "}")
       val hist =
-        s"""{"round":"$label","sf":"$sfDir","quiet":true,"commit":"${graft.Bench.codeStamp()}","contaminated":[],"queries":$qs,"bench_only":{},"steal_max_pct":$stealJson}"""
+        s"""{"round":"$label","sf":"$sfDir","quiet":true,"commit":"${Bench.codeStamp()}","contaminated":[],"queries":$qs,"bench_only":{},"steal_max_pct":$stealJson}"""
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HISTORY.jsonl"),
         (hist + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,

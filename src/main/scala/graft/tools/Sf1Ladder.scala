@@ -62,15 +62,7 @@ object Sf1Ladder {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
     val out = ensureFixture(spark)
 
@@ -92,15 +84,12 @@ object Sf1Ladder {
     val names = sys.env.getOrElse("SPARK_GRAFT_LADDER_QUERIES",
       "q129_tfidf_cosine_join,q194_lp_incremental,q96_pagerank_incremental," +
         "q121_scc,q86_triangles").split(",").map(_.trim).toSeq
-    def force(df: DataFrame): Long =
-      df.select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-        .agg(expr("bit_xor(h)"), count(lit(1))).collect()(0).getLong(1)
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
-      force(fn(spark, "/root/testdata/sf0.001")) // warm JIT/codegen
+      graft.Bench.force(fn(spark, "/root/testdata/sf0.001")) // warm JIT/codegen
       totalWrite.set(0); totalRead.set(0); maxStageWrite.set(0)
       val t0 = System.nanoTime()
-      val rows = force(fn(spark, out))
+      val rows = graft.Bench.force(fn(spark, out))
       val wall = (System.nanoTime() - t0) / 1e9
       println(f"LADDER $name: $wall%.1f s rows=$rows " +
         f"shuffleWrite=${totalWrite.get / 1e6}%.0f MB " +

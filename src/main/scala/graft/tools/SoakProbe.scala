@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   * ~10% near-dup copies of earlier admitted docs, ~5% eval-contaminated.
   * Run: `sbt "runMain graft.tools.SoakProbe [nBatches] [docsPerBatch]"`;
   * results print as one `SOAK` JSON line per sample plus a final summary
-  * table for SCALING.md. */
+  * table for SCALING.md. `SPARK_GRAFT_CPUS` sets the core count (default:
+  * `nproc`, every core the JVM sees). */
 object SoakProbe {
 
   private val words = Vector("alpha", "beta", "gamma", "delta", "epsilon",
@@ -115,15 +116,10 @@ object SoakProbe {
     val compactEvery = 10
     val retrainEvery = 50
     val checkpointEvery = 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.functions.expressions.GraftExtensions)
-      // micro-batches are tiny (tens of docs): 8 shuffle partitions keeps
-      // per-stage task overhead from dominating the fold wall it measures
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session()
+    // micro-batches are tiny (tens of docs): 8 shuffle partitions keeps
+    // per-stage task overhead from dominating the fold wall it measures
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

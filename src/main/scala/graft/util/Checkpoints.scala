@@ -1,6 +1,7 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Shared checkpoint-root bootstrap for operators that materialize a result
   * OFF their round caches (connected components, PageRank): a reliable
@@ -12,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * On a cluster the deployment sets `spark.sparkContext.setCheckpointDir`
   * to durable storage and this helper never creates anything. In local mode
   * (tests, Verify, Bench) it creates a temp root once per JVM and removes
-  * it at exit; the graft entrypoints additionally set
+  * it at exit; [[graft.Session]] additionally pins
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so each call's
   * checkpoint files are reclaimed when its result RDD is GC'd. */
 object Checkpoints {
@@ -39,41 +40,31 @@ object Checkpoints {
     * executor loss, and at 100 TB round counts that trade is wrong by
     * default. `spark.graft.checkpoint.reliable=true|false` overrides in
     * either direction (e.g. a cluster job that prefers restart-on-loss
-    * speed can opt into local). */
-  def barrier(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * speed can opt into local).
+    *
+    * `level` is the local branch's block storage. CORPUS-SCALE pools
+    * (exploded gram/posting/bigram tables) pass `DISK_ONLY`: a big pool
+    * held as memory blocks competes with the very joins that consume it
+    * under the unified memory manager (r17 measurement: q129's 11.5M-row
+    * verification join ran ~30% slower with its postings pool squatting in
+    * an 8 GiB driver's storage memory than with the same pool on disk);
+    * node-/doc-sized tables keep the `MEMORY_AND_DISK` default. The
+    * reliable branch ignores it (a file checkpoint is already disk). */
+  def barrier(df: DataFrame,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val spark = df.sparkSession
     val reliable = spark.conf.getOption("spark.graft.checkpoint.reliable")
       .map(_.toBoolean)
       .getOrElse(!spark.sparkContext.isLocal)
     if (reliable) { ensureDir(spark); df.checkpoint(eager = true) }
-    else df.localCheckpoint(eager = true)
-  }
-
-  /** [[barrier]] for CORPUS-SCALE pools (exploded gram/posting/bigram
-    * tables): on a local master the materialized blocks go to DISK_ONLY
-    * instead of MEMORY_AND_DISK. A big pool held as memory blocks competes
-    * with the very joins that consume it under the unified memory manager
-    * (r17 measurement: q129's 11.5M-row verification join ran ~30% slower
-    * with its postings pool squatting in an 8 GiB driver's storage memory
-    * than with the same pool on disk); node-/doc-sized tables keep the
-    * in-memory [[barrier]]. Cluster default unchanged (reliable file
-    * checkpoint — already disk). */
-  def barrierDisk(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val reliable = spark.conf.getOption("spark.graft.checkpoint.reliable")
-      .map(_.toBoolean)
-      .getOrElse(!spark.sparkContext.isLocal)
-    if (reliable) { ensureDir(spark); df.checkpoint(eager = true) }
-    else df.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    else df.localCheckpoint(eager = true, level)
   }
 
   /** `df.barrier()` postfix form of [[barrier]] so operator code keeps the
     * `.checkpoint(eager = true)`-style call shape. */
-  implicit class BarrierOps(private val df: org.apache.spark.sql.DataFrame)
-      extends AnyVal {
-    def barrier(): org.apache.spark.sql.DataFrame = Checkpoints.barrier(df)
-    def barrierDisk(): org.apache.spark.sql.DataFrame = Checkpoints.barrierDisk(df)
+  implicit class BarrierOps(private val df: DataFrame) extends AnyVal {
+    def barrier(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+      Checkpoints.barrier(df, level)
   }
 
   def ensureDir(spark: SparkSession): Unit =

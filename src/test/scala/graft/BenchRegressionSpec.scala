@@ -146,16 +146,16 @@ class BenchRegressionSpec extends AnyFunSuite {
       var taken = 0
       while (taken < seq.size &&
           (taken == 0 ||
-            tools.QuietProbe.needsAnotherRun(seq.take(taken), minRuns, maxRuns)))
+            Bench.needsAnotherRun(seq.take(taken), minRuns, maxRuns)))
         taken += 1
       taken
     }
     assert(runsTaken(3, 10) > 3, "run 3 (3.25) is >10% above min 2.85 — continue")
     // cap: an unstable sequence must stop at maxRuns, not loop forever
     val unstable = Seq.fill(20)(Seq(1.0, 2.0)).flatten
-    assert(!tools.QuietProbe.needsAnotherRun(unstable.take(10), 3, 10))
+    assert(!Bench.needsAnotherRun(unstable.take(10), 3, 10))
     // stability: a flat tail stops at the minimum run count
-    assert(!tools.QuietProbe.needsAnotherRun(Seq(1.0, 1.02, 1.01), 3, 10))
+    assert(!Bench.needsAnotherRun(Seq(1.0, 1.02, 1.01), 3, 10))
   }
 
   test("SPIKY load: >5% per-query contamination stamps the window and suppresses all flags") {

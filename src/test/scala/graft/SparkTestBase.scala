@@ -4,17 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites run in one
-  * forked JVM under `Test / fork`). */
+  * forked JVM under `Test / fork`). It is the production posture from
+  * [[Session]] at a fixed 4 cores, so results do not depend on the host. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session(cpus = 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
